@@ -368,11 +368,24 @@ def cmd_extract_water_level(args) -> None:
         insert_run_metadata,
         run_metadata_record,
         update_run_dates,
+        upsert_forecast,
     )
     from curw_flo2d_data_manager_spark.session import get_spark
-    from curw_flo2d_data_manager_spark.sinks.upsert import merge_upsert
     from curw_flo2d_data_manager_spark.sources.hychan import parse_hychan
     from curw_flo2d_data_manager_spark.sources.timdep import parse_timdep
+
+    # K8 run provenance (reference: extract_water_level.py:588-591 —
+    # run_meta.json blob next to the output file). Read before any
+    # store write, so a corrupt file stops the run with the store
+    # untouched; a missing one records an empty blob.
+    meta_path = os.path.join(os.path.dirname(os.path.abspath(args.hychan)), "run_meta.json")
+    try:
+        with open(meta_path) as f:
+            run_info = json.load(f)
+    except FileNotFoundError:
+        run_info = {}
+    except ValueError as e:  # JSONDecodeError, or bytes that are not UTF-8
+        raise SystemExit(f"corrupt run metadata {meta_path}: {e}") from e
 
     spark = get_spark(app_name="extract-water-level")
     # fgt = output-file mtime in Sri Lanka time, UTC+5:30
@@ -442,36 +455,33 @@ def cmd_extract_water_level(args) -> None:
         forecast = forecast.unionByName(fp_forecast)
 
     target = os.path.join(args.store, "fcst_data")
-    try:
-        existing = spark.read.parquet(target)
-        merged = merge_upsert(existing, forecast, keys=["tms_id", "time", "fgt"])
-    except AnalysisException:
-        # first run: no existing forecast relation at `target`. Any
-        # other error must propagate — swallowing it would silently
-        # discard the forecast history on the overwrite below.
-        merged = forecast
-    _overwrite_parquet(merged, target)
-    # run-dim dates: start_date pinned at series creation (reference
-    # update_start_date, extract_water_level.py:213-214), fgt advanced
-    # every run (update_latest_fgt, :216-217). Reads the prior dim
-    # (legacy fgt-only schema upgraded in place) and full-outer-merges
-    # the new payload's per-series aggregate.
     dim_target = os.path.join(args.store, "fcst_latest_fgt")
+    # Materialize the payload once: the history merge and the run-dim
+    # update both read it, so the parse runs one time, not two.
+    forecast = forecast.persist()
     try:
-        run_dim = update_run_dates(spark.read.parquet(dim_target), forecast)
-    except AnalysisException:
-        run_dim = update_run_dates(None, forecast)
-    _overwrite_parquet(run_dim, dim_target)
+        forecast.count()
+        try:
+            merged = upsert_forecast(spark.read.parquet(target), forecast)
+        except AnalysisException:
+            # first run: no existing forecast relation at `target`. Any
+            # other error must propagate — swallowing it would silently
+            # discard the forecast history on the overwrite below.
+            merged = forecast
+        _overwrite_parquet(merged, target)
+        # run-dim dates: start_date pinned at series creation (reference
+        # update_start_date, extract_water_level.py:213-214), fgt
+        # advanced every run (update_latest_fgt, :216-217). Reads the
+        # prior dim (legacy fgt-only schema upgraded in place) and
+        # full-outer-merges the new payload's per-series aggregate.
+        try:
+            run_dim = update_run_dates(spark.read.parquet(dim_target), forecast)
+        except AnalysisException:
+            run_dim = update_run_dates(None, forecast)
+        _overwrite_parquet(run_dim, dim_target)
+    finally:
+        forecast.unpersist()
 
-    # K8 run provenance (reference: extract_water_level.py:588-591 —
-    # run_meta.json blob next to the output file + template path).
-    run_info = {}
-    meta_path = os.path.join(os.path.dirname(os.path.abspath(args.hychan)), "run_meta.json")
-    try:
-        with open(meta_path) as f:
-            run_info = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        pass
     record = run_metadata_record(
         spark,
         source_id=args.source_id,

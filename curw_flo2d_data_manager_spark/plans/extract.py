@@ -8,11 +8,16 @@ station lookup (J2), content-addressed series id (X11,
 ``TS.generate_timeseries_id`` over the metadata tuple), upsert with
 the ``fgt`` version column (K7) + ``update_latest_fgt`` (:216-217).
 
-Engine: the parser (sources/hychan.py) already yields every element's
-series in one pass; this plan joins the station map once (broadcast),
-stamps sha2 series ids, and returns the typed forecast relation ready
-for ``sinks.upsert.merge_upsert`` on ``(tms_id, time, fgt)``. One
-shuffle (the parser's line-order window); everything else is narrow.
+Engine: the parsers (sources/hychan.py, sources/timdep.py) yield every
+element's series from one read of each file; their shuffles are the
+fill-down's partition-id exchange (shared by the local fill and the
+carry), HYCHAN's per-section window and TIMDEP's densify join. This
+plan joins the station map once (broadcast) and stamps sha2 series
+ids — narrow, no shuffle — and returns the typed forecast relation.
+``upsert_forecast`` merges it into the stored history on
+``(tms_id, time, fgt)`` with the payload broadcast, so the history is
+streamed once and never shuffled; only the payload's key dedup moves
+rows.
 """
 
 from __future__ import annotations
@@ -79,6 +84,21 @@ def extract_hychan_forecast(
         "value",
         F.lit(fgt).cast("timestamp").alias("fgt"),
     )
+
+
+def upsert_forecast(existing: DataFrame, forecast: DataFrame) -> DataFrame:
+    """K7 MERGE of one run's payload into the stored forecast history
+    (reference: extract_water_level.py:216, ``insert_data`` with
+    ``upsert=True``) via ``sinks.upsert.merge_upsert``.
+
+    The payload is bounded by stations × timesteps of one run while the
+    history grows with every run, so the payload is broadcast: the
+    anti-join streams the history past a hash of the incoming keys
+    instead of shuffling the history to meet them.
+    """
+    from curw_flo2d_data_manager_spark.sinks.upsert import merge_upsert
+
+    return merge_upsert(existing, F.broadcast(forecast), keys=["tms_id", "time", "fgt"])
 
 
 def latest_fgt(forecast: DataFrame) -> DataFrame:

@@ -37,9 +37,11 @@ def _replay_state_partitions(
     DATA, not the machine: one store per ~``keys_per_store`` keys,
     clamped to the session's parallelism. The key count is observed
     for free on the replay-input write job (``Observation`` — no extra
-    action). At sf0.1 this lands in the same 1–4 store range the
-    round-14 warm probes measured fastest (attrib replay: 3.67 s @8 /
-    2.49 @4 / 2.21 @2 partitions, identical rows)."""
+    action) with ``approx_count_distinct(..., rsd=0.01)``: at the
+    default 5% error a key count near a ``keys_per_store`` boundary
+    could land on either side of it. At sf0.1 this lands in the same
+    1–4 store range the round-14 warm probes measured fastest (attrib
+    replay: 3.67 s @8 / 2.49 @4 / 2.21 @2 partitions, identical rows)."""
     cpus = spark.sparkContext.defaultParallelism
     return str(
         max(1, min((int(n_keys) + keys_per_store - 1) // keys_per_store, cpus))
@@ -278,7 +280,7 @@ def stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
     ).observe(
-        obs, F.approx_count_distinct("id").alias("n_keys")
+        obs, F.approx_count_distinct("id", rsd=0.01).alias("n_keys")
     ).repartition(1).write.mode("overwrite").parquet(src)
 
     from pyspark.sql.types import (
@@ -1130,7 +1132,7 @@ def stream_join_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     obs = Observation()
     rows.unionByName(sentinels.select(rows.columns)).observe(
-        obs, F.approx_count_distinct("id").alias("n_keys")
+        obs, F.approx_count_distinct("id", rsd=0.01).alias("n_keys")
     ).repartition(1).write.mode("overwrite").parquet(src)
 
     from pyspark.sql.types import (
@@ -1953,7 +1955,7 @@ def stream_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.unionByName(sentinel).observe(
         obs,
         F.approx_count_distinct(
-            F.window("time", "6 hours").getField("start")
+            F.window("time", "6 hours").getField("start"), rsd=0.01
         ).alias("n_keys"),
     ).repartition(1).write.mode("overwrite").parquet(src)
 

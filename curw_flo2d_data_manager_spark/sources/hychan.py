@@ -10,8 +10,7 @@ line state machine (output/extract_water_level.py:425-523):
   truncated trailing section is dropped), and projects column 1
   (water-level elevation) or column 4 (discharge).
 
-Engine plan (single pass, single global sort over a dimension-sized
-file):
+Engine plan (one read of the file):
 
 1. line-ordered scan (sources/line_text.py)
 2. tag header rows (anchored substring match, X3)
@@ -84,34 +83,36 @@ def _parse_hychan_lines(
     variable: str,
     keep_incomplete: bool,
 ) -> DataFrame:
-    tok = F.split(F.trim(F.col("value")), r"\s+")
-    is_header = F.substring(F.col("value"), 6, len(HEADER_MARK)) == HEADER_MARK
-
-    tagged = lines.select(
-        "file",
-        "line_no",
-        F.when(is_header, F.try_element_at(tok, F.lit(6))).alias("hdr_element"),
-        F.when(is_header, F.col("line_no")).alias("hdr_line"),
-        F.try_element_at(tok, F.lit(1)).try_cast("double").alias("t_hours"),
-        F.try_element_at(tok, F.lit(VALUE_COL[variable] + 1)).alias("raw_value"),
-        is_header.alias("is_header"),
-    )
-
     # W3 fill-down as a parallel prefix (sources/line_text.py
     # ``filldown_headers``): a per-file window would pull an entire
-    # multi-GB HYCHAN into one task (round-2 watch item); the prefix
-    # decomposition keeps the scan's split-level parallelism.
-    sectioned = (
-        filldown_headers(tagged, ["hdr_element", "hdr_line"])
-        .withColumn("element_no", F.col("hdr_element"))
-        .withColumn("section", F.col("hdr_line"))
+    # multi-GB HYCHAN into one task; the prefix decomposition keeps the
+    # scan's split-level parallelism and reads the file once.
+    tok, is_header = F.col("tok"), F.col("is_header")
+    sectioned = filldown_headers(
+        lines,
+        {
+            "element_no": F.when(is_header, F.try_element_at(tok, F.lit(6))),
+            "section": F.when(is_header, F.col("line_no")),
+        },
+        columns={
+            "tok": F.split(F.trim(F.col("value")), r"\s+"),
+            "is_header": F.substring(F.col("value"), 6, len(HEADER_MARK)) == HEADER_MARK,
+        },
     )
 
+    t_hours = F.try_element_at(tok, F.lit(1)).try_cast("double")
     numeric = sectioned.filter(
-        ~F.col("is_header")
+        ~is_header
         & F.col("section").isNotNull()
-        & F.col("t_hours").isNotNull()
-        & ~F.isnan("t_hours")
+        & t_hours.isNotNull()
+        & ~F.isnan(t_hours)
+    ).select(
+        "file",
+        "line_no",
+        "element_no",
+        "section",
+        t_hours.alias("t_hours"),
+        F.try_element_at(tok, F.lit(VALUE_COL[variable] + 1)).alias("raw_value"),
     )
 
     w_sec = Window.partitionBy("file", "section").orderBy("line_no")
@@ -122,16 +123,14 @@ def _parse_hychan_lines(
 
     if not keep_incomplete:
         # SERIES_LENGTH = numeric-row count of each file's first
-        # section (reference pass 1, extract_water_level.py:425-446).
+        # section (reference pass 1, extract_water_level.py:425-446),
+        # from map-side-combined per-section counts rather than a
+        # second pass over the section window's rows.
         first_len = (
-            rows.groupBy("file", "section")
-            .agg(F.first("sec_len").alias("n"))
-            .withColumn(
-                "_rk",
-                F.row_number().over(Window.partitionBy("file").orderBy("section")),
-            )
-            .filter(F.col("_rk") == 1)
-            .select("file", F.col("n").alias("series_length"))
+            numeric.groupBy("file", "section")
+            .count()
+            .groupBy("file")
+            .agg(F.min_by("count", "section").alias("series_length"))
         )
         rows = rows.join(F.broadcast(first_len), "file").filter(
             (F.col("sec_len") >= F.col("series_length"))

@@ -25,7 +25,7 @@ Python stages). ``tests`` also pin order under forced 1 KiB splits.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -38,94 +38,79 @@ def read_lines(spark: SparkSession, path: str) -> DataFrame:
 
 
 def filldown_headers(
-    tagged: DataFrame,
-    cols: list[str],
+    lines: DataFrame,
+    headers: dict[str, Column],
+    columns: dict[str, Column] | None = None,
     order_col: str = "line_no",
     file_col: str = "file",
-    cache: bool = False,
 ) -> DataFrame:
-    """Fill ``cols`` down file line order as a PARALLEL PREFIX.
+    """Add one column per ``headers`` entry: the entry's expression
+    taken from the latest line (in file order) where it is non-null,
+    filled down as a PARALLEL PREFIX.
 
-    A plain ``Window.partitionBy(file)`` fill-down pulls an entire file
-    into ONE task — fine for dimension-sized FLO-2D outputs, a
-    serialization wall for a multi-GB one (round-2 watch item). The
+    ``headers`` maps output names to expressions that are non-null only
+    on header lines, over the line columns (``value``, ``order_col``,
+    ``file_col``) and ``columns``: per-line columns (e.g. the token
+    array) evaluated once per line and kept in the output. A plain ``Window.partitionBy(file)`` fill-down
+    pulls an entire file into ONE task — fine for dimension-sized
+    FLO-2D outputs, a serialization wall for a multi-GB one. The
     standard prefix decomposition keeps the scan's parallelism:
 
-    1. local fill-down inside each scan partition (exchange keyed by
-       (partition id, file) — same volume as the old per-file window,
-       but as many tasks as the scan has splits);
-    2. carry: each partition inherits the last header values from
-       earlier partitions of the same file, computed on the
-       dimension-sized header set and broadcast back;
+    1. local fill-down inside each scan partition (rows exchanged by
+       scan partition id — as many tasks as the scan has splits);
+    2. carry: each partition inherits the fill-down state of the last
+       row of earlier partitions of the same file — one row per
+       partition, windowed and broadcast back;
     3. ``coalesce(local, carry)``.
 
-    ``cols`` must be populated together on the same (header) rows.
-    The two auxiliary scans over the raw text are the declarative twin
-    of the reference's own pass-1 (extract_water_level.py:425-446).
-
-    The plan traverses ``tagged`` three times (local fill, header
-    extraction, pid spine). ``cache=True`` persists it
-    (MEMORY_AND_DISK) so the text scan + tokenization runs once —
-    MEASURED at a 1 GiB HYCHAN on local[32]+page cache this is a
-    pessimization (tools/bench_hychan_scale.py, BASELINE.md: 21.0 s
-    uncached vs 37.1 s cached — persist serialization costs more than
-    two extra codegen scans of locally-cached text), so the default is
-    False; flip it when the source is remote object storage, where the
-    three traversals are three paid network reads. Partition layout is
-    consistent across uncached traversals because split planning over
-    a static file is deterministic (the forced-1 KiB-splits test pins
+    The text is read once. Only the raw line columns cross the
+    exchange; ``columns`` and the header expressions are evaluated
+    above it, and the carry is taken from the local fill's window
+    output, so every branch — the carry, and any second consumer of
+    the result — needs the same exchange columns, and ReuseExchange
+    serves them all from one shuffle (tests/test_plan_quality.py pins
+    one ``FileScan text`` per parse). Derive per-line columns through
+    ``columns``, not before this call (column pruning would make the
+    branches' exchanges differ) and not after it (a filter on them
+    would be pushed below their projection and evaluate them again).
+    Partition labels come from the scan, below the exchange, so the
+    result does not depend on that reuse: split planning over a static
+    file is deterministic (the forced-1 KiB-splits test pins
     byte-identical output across partition counts).
     """
-    from functools import reduce
-
-    from pyspark import StorageLevel
-
-    tagged = tagged.withColumn("_pid", F.spark_partition_id())
-    if cache:
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-    w_loc = (
-        Window.partitionBy("_pid", file_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # Hashing by the partition id alone satisfies every (_pid, file)
+    # grouping below, also when ``file`` is a literal the optimizer
+    # folds out of the window's partition spec.
+    rows = lines.withColumn("_pid", F.spark_partition_id()).repartition("_pid")
+    rows = rows.select("*", *[e.alias(c) for c, e in (columns or {}).items()])
+    w_part = Window.partitionBy("_pid", file_col).orderBy(order_col)
+    w_loc = w_part.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    local = rows.select(
+        "*",
+        *[F.last(e, ignorenulls=True).over(w_loc).alias(c) for c, e in headers.items()],
+        F.lead(order_col).over(w_part).isNull().alias("_last"),
     )
-    local = tagged
-    for c in cols:
-        local = local.withColumn(c, F.last(c, ignorenulls=True).over(w_loc))
 
-    headers = tagged.filter(
-        reduce(lambda a, b: a | b, [F.col(c).isNotNull() for c in cols])
-    )
-    # Last NON-null per column (matching last(..., ignorenulls=True)):
-    # a bare max_by(c, order_col) would take the value at the last
-    # header row even when that value is null (e.g. a malformed header
-    # whose try_element_at missed), silently nulling every later
-    # partition's fill (round-3 advice). Conditioning the order key on
-    # c.isNotNull() makes max_by skip null candidates per column.
-    pid_last = headers.groupBy(file_col, "_pid").agg(
-        *[
-            F.max_by(c, F.when(F.col(c).isNotNull(), F.col(order_col))).alias(
-                f"_h_{c}"
-            )
-            for c in cols
-        ]
-    )
-    pids = tagged.select(file_col, "_pid").distinct()
+    # A partition's last row carries its fill-down state out; each
+    # partition takes the last non-null state of the partitions before
+    # it in the same file. Filtering on a window output keeps this
+    # branch above the window, so its exchange stays identical to the
+    # local fill's.
     w_carry = (
         Window.partitionBy(file_col)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    carry = pids.join(pid_last, [file_col, "_pid"], "left")
-    for c in cols:
-        carry = carry.withColumn(
-            f"_c_{c}", F.last(f"_h_{c}", ignorenulls=True).over(w_carry)
-        )
-    carry = carry.select(file_col, "_pid", *[f"_c_{c}" for c in cols])
+    carry = local.filter("_last").select(
+        file_col,
+        "_pid",
+        *[F.last(c, ignorenulls=True).over(w_carry).alias(f"_c_{c}") for c in headers],
+    )
 
     out = local.join(F.broadcast(carry), [file_col, "_pid"], "left")
-    for c in cols:
+    for c in headers:
         out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"_c_{c}")))
-    return out.drop("_pid", *[f"_c_{c}" for c in cols])
+    return out.drop("_pid", "_last", *[f"_c_{c}" for c in headers])
 
 
 def assert_line_order(spark: SparkSession, path: str) -> None:

@@ -71,23 +71,19 @@ def _parse_timdep_lines(
     cells: DataFrame,
     drop_last_block: bool,
 ) -> DataFrame:
-    tok = F.split(F.trim(F.col("value")), r"\s+")
+    tok = F.col("tok")
     is_header = F.size(tok) == 1
 
-    tagged = lines.select(
-        "file",
-        "line_no",
-        F.when(is_header, F.try_element_at(tok, F.lit(1)).try_cast("double")).alias("hdr_hours"),
-        F.when(~is_header, F.try_element_at(tok, F.lit(1))).alias("cell_id"),
-        F.when(~is_header, F.try_element_at(tok, F.lit(6)).try_cast("double")).alias("v"),
-        is_header.alias("is_header"),
-    )
-
     # parallel-prefix fill-down — see sources/line_text.filldown_headers
-    blocked = (
-        filldown_headers(tagged, ["hdr_hours"])
-        .withColumn("t_hours", F.col("hdr_hours"))
-        .filter(~F.col("is_header") & F.col("t_hours").isNotNull())
+    blocked = filldown_headers(
+        lines,
+        {"t_hours": F.when(is_header, F.try_element_at(tok, F.lit(1)).try_cast("double"))},
+        columns={"tok": F.split(F.trim(F.col("value")), r"\s+")},
+    ).filter(~is_header & F.col("t_hours").isNotNull()).select(
+        "file",
+        "t_hours",
+        F.try_element_at(tok, F.lit(1)).alias("cell_id"),
+        F.try_element_at(tok, F.lit(6)).try_cast("double").alias("v"),
     )
 
     if drop_last_block:

@@ -398,6 +398,82 @@ def test_extract_with_timdep_and_run_metadata(spark, tmp_path):
     )
 
 
+def _extract_inputs(spark, tmp_path):
+    """HYCHAN (two sections, 3 timesteps) + TIMDEP (3 blocks, one gap)
+    and their station maps; returns the extract-water-level argv
+    without --fgt."""
+    store = str(tmp_path / "store")
+    hychan = tmp_path / "HYCHAN.OUT"
+    hychan.write_text("".join(
+        f"     CHANNEL HYDROGRAPH FOR ELEMENT NO:   {el}\n"
+        "   TIME   ELEV   DEPTH   VEL   Q\n"
+        + "".join(f"   {i * 0.25:.2f}   {el / 10 + i:.1f}   1.0   0.1   5.5\n" for i in range(3))
+        for el in (330, 331)
+    ))
+    timdep = tmp_path / "TIMDEP.OUT"
+    timdep.write_text(
+        "   0.00\n   900  1 2 3 4  7.25\n   901  1 2 3 4  8.50\n"
+        "   0.25\n   901  1 2 3 4  8.75\n"
+        "   0.50\n   900  1 2 3 4  7.50\n   901  1 2 3 4  9.00\n"
+    )
+    spark.createDataFrame(
+        [("330", 7, 6.9, 79.8), ("331", 8, 6.95, 79.85)],
+        "element_no string, station_id long, latitude double, longitude double",
+    ).write.parquet(os.path.join(store, "stations"))
+    flood = os.path.join(store, "flood_stations")
+    spark.createDataFrame(
+        [("900", 21, 6.91, 79.81), ("901", 22, 6.92, 79.82)],
+        "element_no string, station_id long, latitude double, longitude double",
+    ).write.parquet(flood)
+    return store, [
+        "extract-water-level", "-m", "flo2d_150_v2",
+        "--hychan", str(hychan), "--base_time", "2024-01-01 00:00:00",
+        "--store", store, "--timdep", str(timdep), "--flood_stations", flood,
+    ]
+
+
+def test_extract_rerun_is_idempotent_and_releases_payload(spark, tmp_path):
+    """Re-running one extraction against an existing history leaves the
+    three tables exactly as the first run left them, and the command
+    releases the payload it materializes (no RDD stays persisted)."""
+    store, argv = _extract_inputs(spark, tmp_path)
+    main(argv + ["--fgt", "2024-01-01 06:00:00"])  # the existing history
+
+    def snapshot():
+        return {
+            t: sorted(spark.read.parquet(os.path.join(store, t)).collect())
+            for t in ("fcst_data", "fcst_latest_fgt", "run_metadata")
+        }
+
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    main(argv + ["--fgt", "2024-01-02 06:00:00"])
+    first = snapshot()
+    main(argv + ["--fgt", "2024-01-02 06:00:00"])
+    assert snapshot() == first
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == persisted
+    # both runs' series are kept: 2 channel + 2 flood-plain stations ×
+    # 3 timesteps per fgt, the TIMDEP gap written as -999
+    assert len(first["fcst_data"]) == 2 * 4 * 3
+    assert sum(r.value == -999.0 for r in first["fcst_data"]) == 2
+
+
+def test_extract_corrupt_run_meta_fails_before_writing(spark, tmp_path):
+    """A run_meta.json that is not JSON stops the command with a
+    message naming the file, before anything is written; a missing one
+    records an empty metadata blob."""
+    store, argv = _extract_inputs(spark, tmp_path)
+    meta = tmp_path / "run_meta.json"
+    meta.write_text('{"rain": ')
+    with pytest.raises(SystemExit, match=str(meta)):
+        main(argv)
+    assert not os.path.exists(os.path.join(store, "fcst_data"))
+
+    meta.unlink()
+    main(argv)
+    rm = spark.read.parquet(os.path.join(store, "run_metadata")).collect()
+    assert [r.metadata for r in rm] == ["{}"]
+
+
 def test_compact_store_cli(spark, tmp_path):
     import glob
 

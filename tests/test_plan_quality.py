@@ -145,6 +145,86 @@ def test_parser_line_source_is_a_file_scan(spark, tmp_path):
     assert "BatchEvalPython" not in plan and "EvalPython" not in plan
 
 
+def _ancestors(plan: str, marker: str) -> list[str]:
+    """The operator lines above the first line containing ``marker`` in
+    a simple-mode plan tree, nearest first."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    i = next(k for k, ln in enumerate(lines) if marker in ln)
+    out, d = [], depth[i]
+    for k in range(i - 1, -1, -1):
+        if lines[k].strip() and depth[k] < d:
+            out.append(lines[k])
+            d = depth[k]
+    return out
+
+
+def test_parsers_read_their_file_once(spark, tmp_path):
+    """Each parse scans its text once: the fill-down's local fill and
+    carry, HYCHAN's SERIES_LENGTH branch and TIMDEP's densify branch
+    all read one partition-id exchange, the later uses as
+    ReusedExchange. 1 KiB splits give the carry many partitions."""
+    from curw_flo2d_data_manager_spark.sources.hychan import parse_hychan
+    from curw_flo2d_data_manager_spark.sources.timdep import parse_timdep
+
+    hychan = tmp_path / "HYCHAN.OUT"
+    hychan.write_text("".join(
+        f"     CHANNEL HYDROGRAPH FOR ELEMENT NO:   {el}\n   TIME   ELEV\n"
+        + "".join(f"   {i * 0.25:.2f}   {el + i / 100:.2f}\n" for i in range(40))
+        for el in range(100, 110)
+    ))
+    timdep = tmp_path / "TIMDEP.OUT"
+    timdep.write_text("".join(
+        f"   {b * 0.5:.2f}\n" + "".join(f"   {c}  1 2 3 4  {b + c / 1000:.3f}\n" for c in range(900, 940))
+        for b in range(10)
+    ))
+    cells = spark.createDataFrame([(str(c),) for c in range(900, 940)], "cell_id string")
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    try:
+        for df in (
+            parse_hychan(spark, str(hychan), "2024-01-01 00:00:00"),
+            parse_timdep(spark, str(timdep), "2024-01-01 00:00:00", cells),
+        ):
+            df.collect()
+            final = df._jdf.queryExecution().executedPlan().toString()
+            final = final.split("== Initial Plan ==")[0]
+            assert final.count("FileScan text") == 1, final
+            assert "ReusedExchange" in final, final
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_extract_merge_broadcasts_payload_not_history(spark, tmp_path):
+    """The forecast upsert streams the stored history through a
+    broadcast anti-join: no Exchange above the history scan, even with
+    automatic broadcasting off — the payload is broadcast by the plan,
+    not by a size estimate."""
+    from datetime import datetime
+
+    from curw_flo2d_data_manager_spark.plans.extract import upsert_forecast
+
+    schema = "tms_id string, station_id long, time timestamp, value double, fgt timestamp"
+    hist = str(tmp_path / "fcst_data")
+    spark.createDataFrame(
+        [("a", 1, datetime(2024, 1, 1, h), 1.0, datetime(2024, 1, 1)) for h in range(5)],
+        schema,
+    ).write.parquet(hist)
+    payload = spark.createDataFrame(
+        [("a", 1, datetime(2024, 1, 1, h), 2.0, datetime(2024, 1, 2)) for h in range(5)],
+        schema,
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = plan_of(upsert_forecast(spark.read.parquet(hist), payload), mode="simple")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    above = _ancestors(plan, "FileScan parquet")
+    assert not [ln for ln in above if "Exchange" in ln], plan
+    assert any("BroadcastHashJoin" in ln and "LeftAnti" in ln for ln in above), plan
+
+
 def test_weighted_sample_is_take_ordered(spark, sf_dir):
     """weighted_sample's orderBy+limit must compile to
     TakeOrderedAndProject (per-partition heaps, no global sort

@@ -9,12 +9,7 @@ path — and records:
 * the same parse at forced 16 MiB splits, asserting an identical
   order-insensitive result fingerprint (partition-count invariance at
   scale, the multi-GB twin of
-  tests/test_sources_parsers.py::test_hychan_parallel_sections_forced_splits),
-* the parse with ``filldown_headers(cache=True)`` (via a monkeypatched
-  flag) to quantify persisting the tagged relation vs re-scanning the
-  text 3x (measured: persist LOSES on local page-cached storage — see
-  the filldown_headers docstring; the flag exists for remote-storage
-  deployments).
+  tests/test_sources_parsers.py::test_hychan_parallel_sections_forced_splits).
 
 Prints one JSON line; numbers land in BASELINE.md.
 
@@ -94,11 +89,10 @@ def main() -> None:
         from curw_flo2d_data_manager_spark.sources import line_text
 
         # warmup: first job pays JVM/codegen/JIT; discard its timing so
-        # the three measured variants compare like-for-like
+        # the measured variants compare like-for-like
         timed_parse(spark, path)
-        spark.catalog.clearCache()
 
-        # default splits (128 MiB), default flags (cache=False)
+        # default splits (128 MiB)
         sec_default, n_default, fp_default = timed_parse(spark, path)
         parts_default = line_text.read_lines(spark, path).rdd.getNumPartitions()
 
@@ -107,24 +101,6 @@ def main() -> None:
         sec_small, n_small, fp_small = timed_parse(spark, path)
         parts_small = line_text.read_lines(spark, path).rdd.getNumPartitions()
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
-
-        # persist ON: quantify caching the tagged relation vs the
-        # default 3 re-scans (loses on local storage, see docstring)
-        orig = line_text.filldown_headers
-
-        def _cached(tagged, cols, order_col="line_no", file_col="file", cache=False):
-            return orig(tagged, cols, order_col, file_col, cache=True)
-
-        import curw_flo2d_data_manager_spark.sources.hychan as hychan_mod
-
-        line_text.filldown_headers = _cached
-        hychan_mod.filldown_headers = _cached
-        try:
-            sec_cached, n_c, _ = timed_parse(spark, path)
-        finally:
-            line_text.filldown_headers = orig
-            hychan_mod.filldown_headers = orig
-            spark.catalog.clearCache()
 
         print(
             json.dumps(
@@ -141,8 +117,6 @@ def main() -> None:
                     "partitions_16mib": parts_small,
                     "split_invariant": (n_default, fp_default)
                     == (n_small, fp_small),
-                    "parse_sec_cached": round(sec_cached, 2),
-                    "cache_speedup": round(sec_default / sec_cached, 2),
                     "lines_per_sec": int(n_lines / sec_default),
                 }
             )
